@@ -70,7 +70,7 @@ def ma_distance(close: float, ma: float) -> float:
 
 def autocorr_windowed(win: list[float], prev_products: list[float]) -> float:
     """W4 lag-1 autocorrelation over the trailing window, the batch
-    windowed-sums expansion (operators/features.py::_autocorr_from_stats):
+    windowed-sums expansion (operators/features.py::_export_sql):
     quantized sums, then num/den in the exact expression order."""
     n = float(len(win))
     if n <= 1.0:

@@ -21,6 +21,21 @@ per day doing an O(n) left-fold loop. The fold order (acc + α(x−acc),
 seeded with first close) is identical to the DuckDB oracle's
 ``list_reduce`` over prefix lists, so doubles match bit-for-bit.
 
+The plan is BUILT from SQL text, not Column chains: the session-filtered
+bars (sources/bars.py) and the whole tail after the EMA (window stats,
+features, warm-up gate, float32 export projection — :func:`_export_sql`,
+generated from :class:`FeatureConfig`) are one ``spark.sql`` statement
+each. Every Column node built in Python is its own py4j round trip, and
+each also pays origin bookkeeping and an active-session lookup; the
+DataFrame-API build of this plan took 4,000–4,800 round trips and
+0.8–1.2 s warm (local[4], 4-vCPU host), about half of a warm export job
+at sf0.01–sf0.1. The SQL build takes ~75 round trips and 0.3–0.4 s,
+mostly the parquet footer read and two parse/analyse calls. Catalyst
+gets the same logical plan either way (operator tree pinned in
+plans/r15/features_flagship_after.txt). Doubles in the text carry the
+``D`` suffix (:func:`_sql_double`) and every cast is explicit, so every
+value is bit-identical to the DataFrame build it replaced.
+
 At 100 TB: days partition the data naturally (≈ thousands of rows per
 (instrument, day) group); ``applyInPandas`` groups stay small and
 parallelism is bounded by #days × #instruments, not data volume. The
@@ -53,7 +68,7 @@ from pyspark.sql import types as T
 
 from strategy_analyzer_exporter_spark import functions as X
 from strategy_analyzer_exporter_spark.schema import export_select
-from strategy_analyzer_exporter_spark.sources.bars import BARS_CTE, bars_df
+from strategy_analyzer_exporter_spark.sources.bars import BARS_CTE, OHLCV_COLUMNS, bars_df
 
 
 @dataclass(frozen=True)
@@ -200,159 +215,166 @@ def with_ema_fold(df: DataFrame, cfg: FeatureConfig = FeatureConfig()) -> DataFr
 # Full pipeline
 
 
-def _dec_to_double(c: Column) -> Column:
-    """decimal → double THROUGH a string (see functions.dsum: engines'
-    direct decimal→double casts can differ by 1 ulp)."""
-    return c.cast("string").cast("double")
+def _sql_double(v: float) -> str:
+    """A Spark SQL DOUBLE literal that parses to exactly ``v``: Spark SQL
+    reads ``100.0`` as DECIMAL and ``1e-6`` by exponent rules, so every
+    double is written with the ``D`` suffix (``100.0D``, ``1E-06D``).
+    ``repr`` is the shortest string that round-trips."""
+    return repr(float(v)).upper() + "D"
 
 
-def _window_stat_cols(
-    ma_col: str, y_col: str, sfx: str, w_day, cfg: FeatureConfig
-) -> dict[str, Column]:
-    """The five window statistics feeding lag-1 autocorrelation + slope,
-    as pure window aggregates (no arrays, no interpreted lambdas —
-    everything stays in WindowExec / whole-stage codegen).
+def _export_sql(cfg: FeatureConfig, full_series: bool = False) -> str:
+    """Spark SQL text of the shared pipeline tail over the view ``{ma}``
+    (bound by ``spark.sql(..., ma=...)``):
+    per-day window stats → autocorr/slope/distance/location features →
+    warm-up gate → alphabetical float32 export projection. ``ma`` carries
+    day/time/OHLCV plus moving_average and slow_moving_average; unless
+    ``full_series``, it is already session-filtered and also carries the
+    within-day lag products _y_f/_y_s (maᵢ·maᵢ₋₁). With ``full_series``
+    the EMAs cover every bar, so the text adds the session filter and the
+    lag products itself.
 
-    Emitted as *named columns in their own projection stage*: Catalyst
-    does NOT dedupe textually-identical window expressions, so inlining
-    these into the autocorr arithmetic would multiply each sliding sum
-    ~15× in the physical plan (observed: 62 window exprs vs 11).
+    Window stats (r15, guide §2.4 "per-task work"): a bounded
+    ``ROWS BETWEEN 20 PRECEDING`` aggregate re-aggregates the whole frame
+    for every row, so each 21-row sum is the difference of two RUNNING
+    sums (incrementally maintained, O(1)/row) picked up via ``lag``. The
+    sums run over DECIMAL(38,12): the quantized values are exact scaled
+    integers, so a difference of running sums IS the sliding sum, and it
+    is order-independent (DuckDB's segment tree and Spark's fold agree).
+    first-of-frame is ``lag(x, window-1)`` with the day's first as
+    fallback; the frame count is ``least(row_number, window)``.
 
-    The sums are computed over DECIMAL(38,12) so they are exact and
-    order-independent — Spark folds a sliding frame sequentially while
-    DuckDB uses a segment tree, so double sums would disagree in the
-    last bit; decimal sums cannot.
+    The running sums are RE-CAST to DECIMAL(30,12) before the difference:
+    a (38,12)−(38,12) result needs precision 39, which Spark caps by
+    REDUCING the scale to 11 — silently rounding the 12th decimal off the
+    grid (measured: 1 row differs at sf0.01). (30,12) holds any
+    day-cumulative here and subtracts to (31,12) with the scale intact.
+    Decimals go back to double THROUGH a string (see functions.dsum:
+    engines' direct decimal→double casts can differ by 1 ulp).
 
-    Known residual: the per-element double→decimal cast itself is not
-    engine-identical for magnitudes where 1e-12 is below the double's
-    ulp (Spark rounds the shortest decimal string, DuckDB the exact
-    binary expansion), leaving ~1e-17 relative noise on the staged
-    sums. Measured effect: 1 row in 89,034 lands one float32 ulp off
-    the oracle at sf0.1 (bit-exact at sf0.01). No decimal scale fixes
-    this — coarser grids quantize real signal, finer grids diverge more
-    (see the measured scale sweep in operators/pipeline.kmeans_update);
-    it is the floor of cross-engine float parity for windowed sums of
-    arbitrary doubles."""
-    w21 = w_day.rowsBetween(-(cfg.window - 1), 0)
-    w20 = w_day.rowsBetween(-(cfg.window - 2), 0)
-    x = F.col(ma_col)
-    dec = "decimal(38,12)"
-    # y_col = x·(previous x in day), pre-staged (window functions can't
-    # nest); null on the day's first row, so the 20-row sum automatically
-    # covers frame positions 1..n−1
-    y = F.col(y_col).cast(dec)
-    return {
-        f"_n_{sfx}": F.count(x).over(w21).cast("double"),
-        f"_s_{sfx}": _dec_to_double(F.sum(x.cast(dec)).over(w21)),
-        f"_ss_{sfx}": _dec_to_double(F.sum((x * x).cast(dec)).over(w21)),
-        f"_p_{sfx}": _dec_to_double(
-            F.coalesce(F.sum(y).over(w20), F.lit(0).cast(dec))
-        ),
-        f"_first_{sfx}": F.first(x).over(w21),
-    }
+    The running sums are named in their own stage: a column referenced
+    both directly and under ``lag`` in one projection would be
+    materialized twice (Catalyst never dedupes window expressions). Both
+    window stages share one (day, time) sort — two adjacent Window nodes,
+    no extra exchange (plan-pinned in plans/r15/features_flagship_after.txt).
 
-
-def _window_stat_cols_running(
-    ma_col: str, y_col: str, sfx: str, w_day, cfg: FeatureConfig
-) -> tuple[dict[str, Column], dict[str, Column]]:
-    """:func:`_window_stat_cols` with O(1)-per-row window frames (r15,
-    guide §2.4/§1.2 "per-task work"): Spark evaluates a bounded
-    ``rowsBetween(-20, 0)`` aggregate by RE-AGGREGATING the whole frame
-    for every row (SlidingWindowFunctionFrame), so the six decimal
-    sliding sums cost O(window) decimal adds per row. The quantized
-    sums are EXACT scaled integers, so each sliding sum equals the
-    difference of two RUNNING sums (UnboundedPreceding frames are
-    incrementally maintained, O(1)/row) picked up via ``lag`` — decimal
-    arithmetic has no rounding at these magnitudes (day-cumulative
-    ≤ ~1e21 ≪ the 10^26 capacity of decimal(38,12)), so every derived
-    value is bit-identical to the frame-aggregated form (twin-pinned in
-    tests/test_features_pipeline.py). first-of-frame becomes
-    ``lag(x, window-1)`` with the day's running first as fallback, and
-    the frame count is ``least(row_number, window)`` (x is never null).
-
-    Returns TWO projection-stage dicts (running sums, then stats from
-    them): referencing a running sum both directly and under ``lag``
-    in one projection makes Catalyst materialize it TWICE (it never
-    dedupes window expressions — see :func:`_window_stat_cols`), so
-    stage 1 names the cumulative columns and stage 2's lags/differences
-    reference plain columns. Both stages share one (day, time) sort —
-    two adjacent Window nodes, no extra exchange (plan-pinned in
-    plans/r15/features_flagship_after.txt).
-
-    The running sums are RE-CAST to decimal(30,12) before the
-    difference: a (38,12)−(38,12) result needs precision 39, which
-    Spark caps by REDUCING the scale to 11 — silently rounding the
-    12th decimal off the quantized grid (measured: 1 row differs at
-    sf0.01). (30,12) is exact for any day-cumulative here (integer
-    part ≤ 1e18 ≫ the ~1e9 bound of an 86400-bar day of ma² sums)
-    and subtracts to (31,12) — no precision-loss path, scale intact."""
-    wrun = w_day.rowsBetween(Window.unboundedPreceding, 0)
-    x = F.col(ma_col)
-    dec = "decimal(38,12)"
-    ndec = "decimal(30,12)"
-    zero = F.lit(0).cast(ndec)
-    y = F.col(y_col).cast(dec)
-    cums = {
-        f"_cs_{sfx}": F.sum(x.cast(dec)).over(wrun).cast(ndec),
-        f"_css_{sfx}": F.sum((x * x).cast(dec)).over(wrun).cast(ndec),
-        f"_cp_{sfx}": F.sum(y).over(wrun).cast(ndec),
-        f"_dayfirst_{sfx}": F.first(x).over(wrun),
-    }
-    cs, css, cp = (
-        F.col(f"_cs_{sfx}"),
-        F.col(f"_css_{sfx}"),
-        F.col(f"_cp_{sfx}"),
-    )
-    stats = {
-        f"_n_{sfx}": F.least(
-            F.row_number().over(w_day), F.lit(cfg.window)
-        ).cast("double"),
-        f"_s_{sfx}": _dec_to_double(
-            cs - F.coalesce(F.lag(cs, cfg.window).over(w_day), zero)
-        ),
-        f"_ss_{sfx}": _dec_to_double(
-            css - F.coalesce(F.lag(css, cfg.window).over(w_day), zero)
-        ),
-        f"_p_{sfx}": _dec_to_double(
-            F.coalesce(cp, zero)
-            - F.coalesce(F.lag(cp, cfg.window - 1).over(w_day), zero)
-        ),
-        f"_first_{sfx}": F.coalesce(
-            F.lag(x, cfg.window - 1).over(w_day),
-            F.col(f"_dayfirst_{sfx}"),
-        ),
-    }
-    return cums, stats
-
-
-def _autocorr_from_stats(ma_col: str, sfx: str, cfg: FeatureConfig) -> Column:
-    """Lag-1 autocorrelation from the staged window stats.
-
-    Algebra (identical formula to Common.cs:29-60, expanded):
+    Autocorrelation (identical formula to Common.cs:29-60, expanded):
       m   = s/n
       num = Σ x_i·x_{i−1} − m(Σ_{i≥1}x_i + Σ_{i≥1}x_{i−1}) + (n−1)m²
           = p − m(2s − first − x) + (n−1)m²
       den = Σx² − 2ms + nm²
     Versus the array fold form (functions.autocorr, used by the
     standalone feature_autocorr query) the VALUES may differ by ~1e-15:
-    same formula, different-but-pinned rounding order. Each query matches
-    its own oracle exactly."""
-    x = F.col(ma_col)
-    n, s, ss, p, first = (
-        F.col(f"_n_{sfx}"),
-        F.col(f"_s_{sfx}"),
-        F.col(f"_ss_{sfx}"),
-        F.col(f"_p_{sfx}"),
-        F.col(f"_first_{sfx}"),
+    same formula, different-but-pinned rounding order. Each query
+    matches its own oracle exactly.
+
+    Known residual: the per-element double→decimal cast is not identical
+    across engines when 1e-12 is below the double's ulp (Spark rounds the
+    shortest decimal string, DuckDB the exact binary expansion). The
+    autocorrelation divides two differences of large window sums that
+    nearly cancel, so on a seeded random walk (perfbench/gen.py) the two
+    autocorrelation columns differ from the oracle in the last bits on
+    0.1–1% of rows: at most 4 float32 ulps (2.7e-7 absolute), measured
+    over 12 seeds; every other column is bit-identical. On the test
+    corpus sf0.01 is bit-exact and sf0.1 has one row in 89,034 one
+    float32 ulp off. No decimal scale fixes this — coarser
+    grids quantize real signal, finer grids diverge more (see the scale
+    sweep in operators/pipeline.kmeans_update); a centred formulation of
+    the autocorrelation would."""
+    d, w = _sql_double, cfg.window
+    dec, ndec = "DECIMAL(38,12)", "DECIMAL(30,12)"
+    zero = f"CAST(0 AS {ndec})"
+
+    def d2d(e: str) -> str:
+        return f"CAST(CAST({e} AS STRING) AS DOUBLE)"
+
+    def invalid(c: str) -> str:
+        return f"(isnull({c}) OR isnan({c}) OR abs({c}) = CAST('Infinity' AS DOUBLE))"
+
+    def ma_distance(c: str, m: str) -> str:  # functions.ma_distance
+        return (
+            f"CASE WHEN {invalid(c)} OR {invalid(m)} THEN {d(0)} "
+            f"WHEN abs({m}) < {d(X.TOLERANCE)} THEN {d(0)} "
+            f"ELSE ({c} - {m}) / {m} * {d(100)} END"
+        )
+
+    def location_value(a: str, h: str, lo: str) -> str:  # functions.location_value
+        return (
+            f"CASE WHEN abs({h} - {lo}) < {d(X.TOLERANCE)} THEN {d(0)} "
+            f"ELSE ({d(2)} * {a} - {h} - {lo}) / ({h} - {lo}) END"
+        )
+
+    cums, stats, feats = [], [], {}
+    for sfx, x, name in (
+        ("f", "moving_average", "f_moving_average"),
+        ("s", "slow_moving_average", "f_moving_average_slow"),
+    ):
+        cs, css, cp = f"_cs_{sfx}", f"_css_{sfx}", f"_cp_{sfx}"
+        cums += [
+            f"CAST(sum(CAST({x} AS {dec})) OVER wrun AS {ndec}) AS {cs}",
+            f"CAST(sum(CAST({x} * {x} AS {dec})) OVER wrun AS {ndec}) AS {css}",
+            f"CAST(sum(CAST(_y_{sfx} AS {dec})) OVER wrun AS {ndec}) AS {cp}",
+            f"first({x}) OVER wrun AS _dayfirst_{sfx}",
+        ]
+        stats += [
+            f"CAST(least(row_number() OVER wd, {w}) AS DOUBLE) AS _n_{sfx}",
+            f"{d2d(f'{cs} - coalesce(lag({cs}, {w}) OVER wd, {zero})')} AS _s_{sfx}",
+            f"{d2d(f'{css} - coalesce(lag({css}, {w}) OVER wd, {zero})')} AS _ss_{sfx}",
+            f"{d2d(f'coalesce({cp}, {zero}) - coalesce(lag({cp}, {w - 1}) OVER wd, {zero})')}"
+            f" AS _p_{sfx}",
+            f"coalesce(lag({x}, {w - 1}) OVER wd, _dayfirst_{sfx}) AS _first_{sfx}",
+        ]
+        n, s, ss, p, first = (f"_{k}_{sfx}" for k in ("n", "s", "ss", "p", "first"))
+        m = f"({s} / {n})"
+        num = f"({p} - {m} * ({d(2)} * {s} - {first} - {x}) + ({n} - {d(1)}) * {m} * {m})"
+        den = f"({ss} - {d(2)} * {m} * {s} + {n} * {m} * {m})"
+        feats[f"{name}_distance"] = ma_distance("close", x)
+        feats[f"{name}_autocorrelation"] = (
+            f"CASE WHEN {n} <= {d(cfg.autocorr_lag)} THEN {d(0)} "
+            f"WHEN abs({den}) < {d(X.TOLERANCE)} THEN {d(0)} ELSE {num} / {den} END"
+        )
+    feats["f_moving_average_slope"] = (
+        f"CASE WHEN _n_f < {d(2)} THEN {d(0)} "
+        f"WHEN abs(_first_f) < {d(cfg.slope_tolerance)} THEN {d(0)} "
+        f"ELSE (moving_average - _first_f) / _first_f * {d(100)} END"
     )
-    m = s / n
-    num = p - m * (F.lit(2.0) * s - first - x) + (n - F.lit(1.0)) * m * m
-    den = ss - F.lit(2.0) * m * s + n * m * m
-    return (
-        F.when(n <= F.lit(float(cfg.autocorr_lag)), F.lit(0.0))
-        .when(F.abs(den) < X.TOLERANCE, F.lit(0.0))
-        .otherwise(num / den)
-    )
+    feats["f_open_location_value"] = location_value("open", "high", "low")
+    feats["f_close_location_value"] = location_value("close", "high", "low")
+    export = []
+    for col in sorted([*feats, "day", "time", "open", "high", "low", "close", "volume"]):
+        e = feats.get(col, col)
+        if cfg.use_float32 and col not in ("day", "time"):
+            e = f"CAST({e} AS FLOAT)"
+        export.append(f"{e} AS {col}")
+    src = "{ma}"
+    if full_series:
+        src = f"""(
+        SELECT *,
+               moving_average * lag(moving_average) OVER wd AS _y_f,
+               slow_moving_average * lag(slow_moving_average) OVER wd AS _y_s
+        FROM {{ma}}
+        WHERE time >= {cfg.time_start} AND time <= {cfg.time_end}
+        WINDOW wd AS (PARTITION BY day ORDER BY time))"""
+    sep = ",\n           "
+    return f"""
+WITH cums AS (
+    SELECT *,
+           {sep.join(cums)}
+    FROM {src}
+    WINDOW wrun AS (PARTITION BY day ORDER BY time
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+),
+stats AS (
+    SELECT day, time, open, high, low, close, volume,
+           moving_average, slow_moving_average,
+           {sep.join(stats)},
+           row_number() OVER wd AS _rn
+    FROM cums
+    WINDOW wd AS (PARTITION BY day ORDER BY time)
+)
+SELECT {sep.join(export)}
+FROM stats
+WHERE _rn >= {cfg.bars_required}"""
 
 
 def features_df_fused(
@@ -382,10 +404,9 @@ def features_df_fused(
     slope_tol = float(cfg.slope_tolerance)
     bars_required = cfg.bars_required
 
-    bars = bars_df(spark, sf_dir)
-    sess = bars.filter(
-        (F.col("time") >= cfg.time_start) & (F.col("time") <= cfg.time_end)
-    ).select("day", "time", "open", "high", "low", "close", "volume")
+    sess = bars_df(
+        spark, sf_dir, OHLCV_COLUMNS, time_range=(cfg.time_start, cfg.time_end)
+    )
 
     out_schema = T.StructType(
         [
@@ -519,121 +540,30 @@ def features_df(
     spark: SparkSession,
     sf_dir: str,
     cfg: FeatureConfig = TESTDATA_CONFIG,
-    ema_impl: str = "pandas",
-    stats_impl: str = "running",
 ) -> DataFrame:
     """bars → session filter → EMA → window features → warm-up gate →
     alphabetical float32 export projection (FIXTURES.md §2 schema).
 
-    One logical day-partitioning serves the whole plan: bars derivation,
-    EMA grouping, and every window feature share hash(day), so after the
-    first exchange everything is sorts + window aggregates within
-    partitions. Requires cfg.autocorr_lag == 1 (the windowed-sums
-    expansion is lag-1; the general-lag array form lives in
-    functions.autocorr)."""
+    Three build steps, two of them SQL text: the session-filtered bars
+    (one statement), the EMA grouped-map, and the tail
+    (:func:`_export_sql`, one statement). One logical day-partitioning
+    serves the whole plan: bars derivation, EMA grouping, and every
+    window feature share hash(day), so after the first exchange
+    everything is sorts + window aggregates within partitions. Requires
+    cfg.autocorr_lag == 1 (the windowed-sums expansion is lag-1; the
+    general-lag array form lives in functions.autocorr)."""
     if cfg.autocorr_lag != 1:
         raise ValueError("features_df implements lag-1 autocorrelation")
-    bars = bars_df(spark, sf_dir)
     # P3 — session predicate first, like the reference (bars outside the
-    # session never enter the buffers). Also lets Catalyst push the
-    # filter into the parquet scan of the underlying events table.
-    sess = bars.filter(
-        (F.col("time") >= cfg.time_start) & (F.col("time") <= cfg.time_end)
-    )
+    # session never enter the buffers); it lands right above the `open`
+    # lag, below the EMA, so Python sees only session rows.
     # r14 (guide §4.1 — pass only what the boundary needs): event_id /
-    # user_id exist only to derive high/low/volume inside bars_df and
-    # never reach the export projection, but applyInPandas is opaque to
-    # column pruning, so without this drop they cross the Python
-    # boundary both ways (2 of 9 input columns) for nothing.
-    sess = sess.drop("event_id", "user_id")
-    w_day = Window.partitionBy("day").orderBy("time")
-    if ema_impl == "pandas":
-        ma = _with_ema_and_lag_products(sess, cfg)
-    else:
-        ma = with_ema_fold(sess, cfg).withColumns(
-            {
-                "_y_f": F.col("moving_average") * F.lag("moving_average").over(w_day),
-                "_y_s": F.col("slow_moving_average")
-                * F.lag("slow_moving_average").over(w_day),
-            }
-        )
-    return _staged_to_export(ma, cfg, stats_impl=stats_impl)
-
-
-def _staged_to_export(
-    ma: DataFrame, cfg: FeatureConfig, stats_impl: str = "running"
-) -> DataFrame:
-    """Shared pipeline tail: per-day window stats → autocorr/slope/
-    distance/location features → per-day warm-up gate → alphabetical
-    float32 export projection. ``ma`` must carry day/time/OHLCV plus
-    moving_average, slow_moving_average, _y_f, _y_s (within-day lag
-    products). ``stats_impl="running"`` (registered default, r15) uses
-    O(1)-per-row running-sum/lag frames; ``"frame"`` is the pre-r15
-    bounded-frame shape — bit-identical (see
-    :func:`_window_stat_cols_running`), twin-pinned."""
-    w_day = Window.partitionBy("day").orderBy("time")
-    if stats_impl == "running":
-        cums_f, stats_f = _window_stat_cols_running(
-            "moving_average", "_y_f", "f", w_day, cfg
-        )
-        cums_s, stats_s = _window_stat_cols_running(
-            "slow_moving_average", "_y_s", "s", w_day, cfg
-        )
-        # two projection stages → two adjacent Window nodes sharing one
-        # (day, time) sort: running sums first, O(1) lags/diffs second
-        staged = ma.withColumns({**cums_f, **cums_s}).withColumns(
-            {**stats_f, **stats_s, "_rn": F.row_number().over(w_day)}
-        )
-    else:
-        # one Window stage, all expressions sharing one (day, time) sort
-        stats = {
-            **_window_stat_cols("moving_average", "_y_f", "f", w_day, cfg),
-            **_window_stat_cols(
-                "slow_moving_average", "_y_s", "s", w_day, cfg
-            ),
-            "_rn": F.row_number().over(w_day),
-        }
-        staged = ma.withColumns(stats)
-
-    slope_tol = float(cfg.slope_tolerance)
-    slope = (
-        F.when(F.col("_n_f") < F.lit(2.0), F.lit(0.0))
-        .when(F.abs(F.col("_first_f")) < F.lit(slope_tol), F.lit(0.0))
-        .otherwise(
-            (F.col("moving_average") - F.col("_first_f"))
-            / F.col("_first_f")
-            * F.lit(100.0)
-        )
+    # user_id never reach the export, and applyInPandas is opaque to
+    # column pruning, so they are not selected at all.
+    sess = bars_df(
+        spark, sf_dir, OHLCV_COLUMNS, time_range=(cfg.time_start, cfg.time_end)
     )
-
-    feat = staged.select(
-        "day",
-        "time",
-        "open",
-        "high",
-        "low",
-        "close",
-        "volume",
-        "_rn",
-        X.ma_distance("close", "moving_average").alias("f_moving_average_distance"),
-        X.ma_distance("close", "slow_moving_average").alias(
-            "f_moving_average_slow_distance"
-        ),
-        _autocorr_from_stats("moving_average", "f", cfg).alias(
-            "f_moving_average_autocorrelation"
-        ),
-        _autocorr_from_stats("slow_moving_average", "s", cfg).alias(
-            "f_moving_average_slow_autocorrelation"
-        ),
-        slope.alias("f_moving_average_slope"),
-        X.location_value("open", "high", "low").alias("f_open_location_value"),
-        X.location_value("close", "high", "low").alias("f_close_location_value"),
-    )
-    # P5 — warm-up: emit only once the day's buffer holds ≥ bars_required
-    # rows. On the first emitted row the frame holds exactly
-    # bars_required rows; afterwards the full `window` rows.
-    gated = feat.filter(F.col("_rn") >= cfg.bars_required).drop("_rn")
-    return export_select(gated, use_float32=cfg.use_float32)
+    return spark.sql(_export_sql(cfg), ma=_with_ema_and_lag_products(sess, cfg))
 
 
 def features_df_full_ema(
@@ -660,9 +590,7 @@ def features_df_full_ema(
     a_f = 2.0 / (cfg.span_fast + 1.0)
     a_s = 2.0 / (cfg.span_slow + 1.0)
 
-    bars = bars_df(spark, sf_dir).select(
-        "day", "time", "open", "high", "low", "close", "volume"
-    )
+    bars = bars_df(spark, sf_dir, OHLCV_COLUMNS)
     out_schema = T.StructType(
         bars.schema.fields
         + [
@@ -697,26 +625,15 @@ def features_df_full_ema(
         .sortWithinPartitions("day", "time")
         .mapInPandas(ema_scan, out_schema)
     )
-    # session filter AFTER the EMA — out-of-session bars advanced the
-    # accumulators but never enter the buffers (reference order:
-    # indicator update happens on every bar, the time gate only guards
-    # GetFeaturesBar)
-    sess = ma_all.filter(
-        (F.col("time") >= cfg.time_start) & (F.col("time") <= cfg.time_end)
-    )
-    w_day = Window.partitionBy("day").orderBy("time")
-    ma = sess.withColumns(
-        {
-            "_y_f": F.col("moving_average") * F.lag("moving_average").over(w_day),
-            "_y_s": F.col("slow_moving_average")
-            * F.lag("slow_moving_average").over(w_day),
-        }
-    )
-    return _staged_to_export(ma, cfg)
+    # session filter AFTER the EMA (inside the SQL tail) — out-of-session
+    # bars advanced the accumulators but never enter the buffers
+    # (reference order: indicator update happens on every bar, the time
+    # gate only guards GetFeaturesBar)
+    return spark.sql(_export_sql(cfg, full_series=True), ma=ma_all)
 
 
 def _autocorr_win_sql(sfx: str, lag: int) -> str:
-    """DuckDB mirror of _windowed_autocorr_cols' double arithmetic."""
+    """DuckDB mirror of :func:`_export_sql`'s autocorrelation arithmetic."""
     m = f"(s_{sfx} / n_{sfx})"
     x = "moving_average" if sfx == "f" else "slow_moving_average"
     num = f"(p_{sfx} - {m} * (2.0 * s_{sfx} - first_{sfx} - {x}) + (n_{sfx} - 1.0) * {m} * {m})"
@@ -729,7 +646,7 @@ def _autocorr_win_sql(sfx: str, lag: int) -> str:
 
 
 def _features_tail_sql(cfg: FeatureConfig) -> str:
-    """SQL twin of :func:`_staged_to_export`: the pipeline tail from an
+    """DuckDB twin of :func:`_export_sql`: the pipeline tail from an
     upstream CTE named ``ma`` (day/time/OHLCV + moving_average +
     slow_moving_average) through lag products, exact-decimal window
     stats, features, warm-up gate, and the export projection."""
@@ -800,7 +717,7 @@ FROM feat"""
 def features_sql(cfg: FeatureConfig = TESTDATA_CONFIG) -> str:
     """DuckDB oracle for :func:`features_df` — same op sequence: EMA by
     left-fold over per-day prefix lists, autocorrelation by exact-decimal
-    window sums expanded exactly like _window_stat_cols."""
+    window sums expanded exactly like :func:`_export_sql`."""
     ema_f = X.ema_fold_sql("_closes", cfg.span_fast)
     ema_s = X.ema_fold_sql("_closes", cfg.span_slow)
     return f"""

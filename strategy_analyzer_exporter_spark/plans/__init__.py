@@ -24,6 +24,16 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
+def operator_tree(plan: DataFrame | str) -> str:
+    """The operator-name tree of a physical plan: the header block of
+    ``explain("formatted")`` with the node ids stripped, so two plans of
+    the same shape compare equal across sessions and inputs. ``plan`` is
+    a DataFrame or the text of a saved formatted plan (plans/r*/)."""
+    text = plan if isinstance(plan, str) else formatted_plan(plan)
+    header = text.split("== Physical Plan ==", 1)[1].strip("\n").split("\n\n", 1)[0]
+    return re.sub(r"\s*\(\d+\)$", "", header, flags=re.M)
+
+
 def _strip_initial_plan_blocks(plan: str) -> str:
     """Drop ``== Initial Plan ==`` blocks from the plan string. When a
     cached relation's lineage is printed (once per InMemoryTableScan),

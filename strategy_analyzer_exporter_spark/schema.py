@@ -167,11 +167,22 @@ def export_select(df: DataFrame, use_float32: bool = True) -> DataFrame:
     (alphabetical) column order plus optional double→float32 narrowing at
     write time (S4, DatabaseWriter.cs:198-202). Narrowing happens only
     here — never in intermediate computation — matching the reference,
-    which computes in double and narrows per-append."""
+    which computes in double and narrows per-append.
+
+    A frame that already conforms (ordinal order, nothing left to
+    narrow) is returned unchanged after one schema read: re-projecting
+    an exported 14-column frame costs ~350 py4j round trips."""
+    fields = df.schema.fields
+    names = [f.name for f in fields]
+    narrow = {
+        f.name for f in fields if use_float32 and isinstance(f.dataType, T.DoubleType)
+    }
+    if names == ordinal_sorted(names) and not narrow:
+        return df
     cols = []
-    for name in ordinal_sorted(df.columns):
+    for name in ordinal_sorted(names):
         c = F.col(name)
-        if use_float32 and isinstance(df.schema[name].dataType, T.DoubleType):
+        if name in narrow:
             c = c.cast("float")
         cols.append(c.alias(name))
     return df.select(*cols)

@@ -13,7 +13,27 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def host_cpus() -> int:
+    """Cores for ``local[N]``: ``$SPARK_GRAFT_CPUS``, else the CPUs this
+    process may run on (its affinity mask, not the machine's count)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+def host_driver_mem() -> str:
+    """Driver heap: ``$SPARK_GRAFT_DRIVER_MEM``, else a quarter of
+    MemTotal (at least 1g) — the JVM shares the host with the Python
+    workers, DuckDB and whatever else runs there."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{max(1024, kb // 1024 // 4)}m"
+
+
+DEFAULT_SHUFFLE_PARTITIONS = host_cpus()
 
 # Spark 4's EliminateWindowPartitions folds constant window partition
 # keys away — turning the deliberate `partitionBy(lit(0))` that
@@ -51,13 +71,14 @@ def get_spark(
 
     Settings that matter at scale (100 TB design point):
     - AQE + coalesce + skew-join handling enabled.
-    - shuffle partitions sized from the environment rather than the
-      Spark default of 200.
+    - ``local[N]``, shuffle partitions and driver heap sized from the
+      host (``host_cpus``/``host_driver_mem``; ``$SPARK_GRAFT_CPUS`` and
+      ``$SPARK_GRAFT_DRIVER_MEM`` override) rather than fixed numbers
+      or the Spark default of 200 partitions.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master or f"local[{host_cpus()}]")
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
@@ -69,10 +90,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # local mode = driver-only, so this is the whole executor heap;
-        # 16g showed GC-bound bimodal latency (2s vs 50s on identical
-        # plans) once several heavy queries shared a session — 48g keeps
-        # old-gen churn out of the measurement on the 128 GiB test host
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # sized from the host (host_driver_mem): a fixed 48g asked a
+        # 15 GB host for three times its memory and got OOM-killed
+        .config("spark.driver.memory", host_driver_mem())
         # whole-stage codegen emits one compiled class per plan stage;
         # a session that runs the full 100-query registry (or the 14
         # headline bench plans with warm-ups) overflows the JVM-17

@@ -69,3 +69,17 @@ def test_export_select_discipline(spark):
     assert out.columns == ["day", "name", "zz"]
     assert isinstance(out.schema["zz"].dataType, T.FloatType)
     assert isinstance(out.schema["day"].dataType, T.IntegerType)
+
+
+def test_export_select_is_identity_on_conforming_frame(spark):
+    """An already-exported frame (ordinal order, no double left) comes
+    back as the same object; one that still needs work does not."""
+    done = schema.export_select(
+        spark.createDataFrame([(1.5, 2, "x")], "zz: double, day: int, name: string")
+    )
+    assert schema.export_select(done, use_float32=True) is done
+    kept_double = spark.createDataFrame([(2, 1.5)], "day: int, zz: double")
+    assert schema.export_select(kept_double, use_float32=False) is kept_double
+    assert schema.export_select(kept_double, use_float32=True) is not kept_double
+    unsorted = spark.createDataFrame([(1.5, 2)], "zz: float, day: int")
+    assert schema.export_select(unsorted).columns == ["day", "zz"]

@@ -235,34 +235,28 @@ def test_autocorr_from_sums_bit_equals_windowed():
             assert a == b, (trial, x, win, a, b)
 
 
-def test_running_stats_byte_equal_to_frame_stats(spark):
-    """r15: the O(1)-per-row running-sum/lag window stats
-    (stats_impl="running", the registered default) must reproduce the
-    bounded-frame shape to the byte at BOTH gate scales — the decimal
-    sliding sums are exact integers, so difference-of-running-sums is
-    the identical value, and everything downstream is the same pinned
-    float64 sequence. Also guards the decimal(30,12) re-cast: a naked
-    (38,12)−(38,12) difference goes through Spark's precision-loss
-    path (scale 12 → 11) and rounds the quantized grid (measured: 1
-    row at sf0.01 before the fix)."""
-    from strategy_analyzer_exporter_spark.operators.features import (
-        TESTDATA_CONFIG,
-        features_df,
-    )
+def test_flagship_build_stays_within_py4j_budget(spark):
+    """Building the flagship plan is three SQL/grouped-map steps, not a
+    per-Column chain: each Column node is its own py4j round trip, and
+    the DataFrame-API build took over 4,000 of them. Only the building
+    thread's calls count: py4j's finalizer thread sends a detach for
+    every JavaObject Python's GC frees, whenever that happens to run."""
+    import threading
 
-    for sf in ("0.001", "0.01"):
-        d = f"/root/testdata/sf{sf}"
-        a = (
-            features_df(spark, d, TESTDATA_CONFIG, stats_impl="running")
-            .toPandas()
-            .sort_values(["day", "time"])
-            .reset_index(drop=True)
-        )
-        b = (
-            features_df(spark, d, TESTDATA_CONFIG, stats_impl="frame")
-            .toPandas()
-            .sort_values(["day", "time"])
-            .reset_index(drop=True)
-        )
-        assert list(a.columns) == list(b.columns)
-        assert a.equals(b), sf
+    client = spark.sparkContext._gateway._gateway_client
+    orig = client.send_command
+    me = threading.current_thread()
+    calls = 0
+
+    def counting(*args, **kwargs):
+        nonlocal calls
+        calls += threading.current_thread() is me
+        return orig(*args, **kwargs)
+
+    features_df(spark, SF, TESTDATA_CONFIG)  # first build warms caches
+    client.send_command = counting
+    try:
+        features_df(spark, SF, TESTDATA_CONFIG)
+    finally:
+        client.send_command = orig
+    assert calls <= 150, calls

@@ -2,6 +2,8 @@
 counts. These guard the 100 TB properties that value-correctness tests
 can't see (SURVEY.md §4)."""
 
+import os
+
 import pyspark.sql.functions as F
 
 from strategy_analyzer_exporter_spark import plans as P
@@ -49,6 +51,19 @@ def test_feature_pipeline_exchange_budget(spark):
     df = features_df(spark, SF, TESTDATA_CONFIG)
     n = P.count_exchanges(df)
     assert n <= 2, P.physical_plan(df)
+
+
+def test_feature_pipeline_operator_tree_is_pinned(spark):
+    """The SQL-text build of features_flagship plans the same operator
+    tree as the DataFrame build it replaced (pinned in r15): two
+    exchanges, one Sort per exchange, two adjacent Window nodes for the
+    running sums and their lags."""
+    pinned = os.path.join(
+        os.path.dirname(__file__), "..", "plans", "r15", "features_flagship_after.txt"
+    )
+    with open(pinned) as f:
+        want = P.operator_tree(f.read())
+    assert P.operator_tree(features_df(spark, SF, TESTDATA_CONFIG)) == want
 
 
 def test_feature_pipeline_time_filter_pushdown(spark):
